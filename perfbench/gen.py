@@ -34,6 +34,9 @@ _WORDS = ("spark window merge table column vector stream value data small "
           "join filter big group hash customer sort order slow line part "
           "fast row the agg key query a scan batch").split()
 
+#: The seed of the tables the benchmark reads; --seed drives the ops, not them.
+DATA_SEED = 42
+
 _DAY_US = 86_400 * 1_000_000
 _ORDER_START = np.datetime64("1995-01-01", "us")
 _ORDER_DAYS = 2404  # 1995-01-01 .. 2001-08-01

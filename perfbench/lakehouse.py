@@ -8,13 +8,15 @@ table history, OPTIMIZE with Z-order and VACUUM. Every op calls one
 public verb of ``sources.ingest`` or ``sources.pyds``.
 
 A DuckDB model applies the same seeded sequence next to the engine,
-outside the timed ops: each read's row count and the final snapshot
-are checked against it.
+outside the timed ops. After every write the engine's latest snapshot
+is compared with the model's, row for row; every read's row count and
+the versions VACUUM drops are checked against it too.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 import duckdb
 import numpy as np
@@ -42,6 +44,9 @@ INGEST_VERBS = ("merge_upsert", "delete_where",
 PYDS_VERBS = ("write_jsonl_sales", "read_jsonl_sales")
 WRITE_OPS = ("merge_upsert", "delete_where", "update_where",
              "write_jsonl_sales", "optimize_version", "vacuum_versions")
+#: Writes whose new version is compared with the model, row for row.
+SNAPSHOT_CHECKED = ("merge_upsert", "delete_where", "update_where",
+                    "optimize_version")
 
 
 class Model:
@@ -53,6 +58,7 @@ class Model:
             f"CREATE TABLE t AS SELECT {', '.join(COLS)} "
             f"FROM read_parquet('{orders_parquet}')")
         self.versions: list[int] = []
+        self.next_key = int(self.keys().max()) + 1  # first key a MERGE inserts
 
     def commit(self, version: int) -> None:
         if self.versions and version == self.versions[-1]:
@@ -104,7 +110,7 @@ class Lakehouse:
     """Drives the op sequence; ``ops`` collects one record per op."""
 
     def __init__(self, spark, sf_dir: str, table_dir: str, scratch: str,
-                 rng: np.random.Generator, tracer):
+                 rng: np.random.Generator, tracer, model: Model):
         from project2_bigdata_spark.catalog import table
 
         self.spark = spark
@@ -113,9 +119,9 @@ class Lakehouse:
         self.rng = rng
         self.tracer = tracer
         self.counters = None  # set with traced_run once the loop starts
-        self.model = Model(os.path.join(sf_dir, "orders.parquet"))
+        self.model = model
         self.schema = table(spark, sf_dir, "orders").select(*COLS).schema
-        self.next_key = int(self.model.keys().max()) + 1
+        self.next_key = model.next_key
         self.ops: list[dict] = []
         self.n = 0
         self.k = 0  # position within the current cycle
@@ -136,9 +142,10 @@ class Lakehouse:
     # -- op plumbing ---------------------------------------------------
     def _op(self, verb: str, body, expect=None, delta_bytes=0):
         """Run one op. ``body(run)`` returns the engine's answer;
-        ``expect(answer)`` returns None or a reason it is wrong. In a
-        traced run every other op is traced, alternating between cycles
-        as in ``QueryDriver.cycle``."""
+        ``expect(answer)`` returns None or a reason it is wrong. A write
+        that commits is also checked by comparing the latest snapshot
+        with the model's. In a traced run every other op is traced,
+        alternating between cycles as in ``QueryDriver.cycle``."""
         traced = self.traced_run and (self.k + self.cycles) % 2 == 0
         self.n += 1
         op = {"id": f"{verb}#{self.n}", "name": verb, "traced": traced,
@@ -147,13 +154,17 @@ class Lakehouse:
         run = OpRun(op, self.tracer, self.counters)
         v_before = self.model.versions[-1]
         ans = run(lambda: body(run))
+        t0 = time.perf_counter()
         if op["error"] is None and expect is not None:
             try:
                 wrong = expect(ans)
             except Exception as e:  # noqa: BLE001
                 wrong = f"check raised {type(e).__name__}: {e}"
+            if not wrong and verb in SNAPSHOT_CHECKED:
+                wrong = self.snapshot_diff()
             if wrong:
                 op["error"] = f"wrong result: {wrong}"[:300]
+        op["check_s"] = time.perf_counter() - t0
         if op["kind"] == "write":
             v = self.model.versions[-1]
             self.meter.observe(delta_bytes, None if v == v_before
@@ -304,8 +315,8 @@ class Lakehouse:
                  lambda run: self._count(run, pyds.read_jsonl_sales(spark, out)),
                  expect=lambda n: _diff(n, n_rows))
 
-    def check_final(self) -> str | None:
-        """Compare the latest snapshot with the model, outside timing."""
+    def snapshot_diff(self) -> str | None:
+        """Compare the latest snapshot with the model's, outside timing."""
         from project2_bigdata_spark.sources.ingest import read_version
         from tests.oracle_harness import canon
 

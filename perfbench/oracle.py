@@ -46,22 +46,23 @@ def expected_answers(registry, names, data_dir: str) -> dict[str, object]:
     return out
 
 
-def check(sdf, expected) -> str | None:
-    """None when the Spark DataFrame ``sdf`` matches ``expected``,
-    else a one-line reason. Same rules as ``tests/oracle_harness``:
-    atomic column types, equal column sets and row counts, exact values
-    (floats bit-equal, NaN equal to NaN) after canonicalisation."""
+def check(schema, answer: pd.DataFrame, expected) -> str | None:
+    """None when ``answer`` (a Spark result of ``schema`` collected with
+    ``toPandas()``) matches ``expected``, else a one-line reason. Same
+    rules as ``tests/oracle_harness``: atomic column types, equal column
+    sets and row counts, exact values (floats bit-equal, NaN equal to NaN)
+    after canonicalisation."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     from tests.oracle_harness import canon
 
     if isinstance(expected, str):  # ROWS_ONLY
-        return None if sdf.limit(1).count() > 0 else "rows-only: empty result"
-    cplx = [f.name for f in sdf.schema.fields
+        return None if len(answer) > 0 else "rows-only: empty result"
+    cplx = [f.name for f in schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))]
     if cplx:
         return f"complex-typed columns {cplx}"
-    return compare_frames(canon(sdf.toPandas()), expected)
+    return compare_frames(canon(answer), expected)
 
 
 def compare_frames(actual: pd.DataFrame, expected: pd.DataFrame) -> str | None:

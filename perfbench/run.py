@@ -3,9 +3,10 @@
     python3 perfbench/run.py --workload dashboard --seed 1 --seconds 8 --trace 0
 
 Builds its inputs under ``perfbench/.cache`` on first use (synthetic tables
-from ``gen.py`` and the DuckDB oracle answers), sets the session up several
-times and reports the median, then runs whole cycles of the workload's ops
-for at least ``--seconds`` and checks every answer. The last line of stdout
+from ``gen.py`` and the DuckDB oracle answers), sets up once (JVM launch
+through ``session.get_session``, warm-up, fixture build), then runs whole
+cycles of the workload's ops for at least ``--seconds`` and checks every
+answer. The last line of stdout
 is one JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``
 (the end-to-end metrics with ``--trace 0``, the per-layer ones with
 ``--trace 1``). The line before it is the full record, also written to
@@ -21,6 +22,7 @@ import math
 import os
 import platform
 import shutil
+import signal
 import subprocess
 import sys
 import tempfile
@@ -30,7 +32,7 @@ import traceback
 import numpy as np
 
 import gen
-from lakehouse import INGEST_VERBS, PYDS_VERBS, Lakehouse
+from lakehouse import INGEST_VERBS, PYDS_VERBS, Lakehouse, Model
 from metrics import failed_ratio, median, percentile
 from oracle import expected_answers
 from tracing import SparkCounters, StreamProgress, Tracer
@@ -40,8 +42,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(HERE, ".cache")
 PACKAGE = "project2_bigdata_spark"
-DATA_SEED = 42  # the tables are fixed; --seed drives op order and batches
-SETUP_ROUNDS = 3
 
 BENCHMARK_JSON = os.path.join(ROOT, "BENCHMARK.json")
 
@@ -86,10 +86,10 @@ def prepare_env(scratch: str) -> None:
 
 def data_dir(sf: float) -> str:
     """Generated tables for ``sf``, built once per checkout."""
-    d = os.path.join(CACHE, "data", f"sf{sf}-seed{DATA_SEED}")
+    d = os.path.join(CACHE, "data", f"sf{sf}-seed{gen.DATA_SEED}")
     if not os.path.isdir(d):
         tmp = tempfile.mkdtemp(prefix="gen-", dir=os.path.join(CACHE, "data"))
-        gen.write(tmp, sf, DATA_SEED)
+        gen.write(tmp, sf, gen.DATA_SEED)
         os.replace(tmp, d)
     return d
 
@@ -194,12 +194,18 @@ def start_session(app: str):
     return spark
 
 
-def stop_session(spark) -> None:
-    """Stop the session and the JVM, waiting until it exits."""
+def stop_session() -> None:
+    """Stop the session and the JVM, if the run started them, waiting
+    until the JVM exits."""
+    if "pyspark" not in sys.modules:
+        return
     from pyspark import SparkContext
+    from pyspark.sql import SparkSession
 
     gw = SparkContext._gateway
-    spark.stop()
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.stop()
     if gw is not None:
         proc = getattr(gw, "proc", None)
         gw.shutdown()
@@ -247,9 +253,10 @@ def op_layers(traced: list[dict], cores: int, tracer) -> dict[str, float]:
 
 
 def lakehouse_layers(traced: list[dict], tracer, lake) -> dict[str, float]:
+    traced = [o for o in traced if o["kind"] != "query"]
     ids = {o["id"] for o in traced}
     incl = tracer.inclusive_by_name(ids)
-    out = {}
+    out = {"ingest.jobs": sum(o["spark"]["jobs"] for o in traced) / len(traced)}
     for verb in INGEST_VERBS:
         calls, secs = incl.get(f"ingest.{verb}", (0, 0.0))
         out[f"ingest.{verb}.calls"] = float(calls)
@@ -316,23 +323,22 @@ def run(args, scratch: str) -> dict:
         tracer.install(targets, PACKAGE)
         tracer.install_py4j_counter()
 
-    # Setup, several times: session start, warm-up and fixture build. The
-    # first round launches the JVM; later rounds start a new session on it.
+    # Setup, timed once: JVM launch and session start, warm-up, fixture
+    # build. The DuckDB model of the lakehouse is the check's, built first.
     rng = np.random.default_rng(args.seed)
     streams = any(n.startswith("stream_") for n in wl.ops)
-    spark, lake = None, None
-    setup_s, session_s = [], []
-    for i in range(SETUP_ROUNDS):
-        t0 = time.perf_counter()
-        spark = start_session(f"perfbench-{wl.name}") if spark is None else spark.newSession()
-        session_s.append(time.perf_counter() - t0)
-        warm_up(spark, sf_dir)
-        if lake_dir:
-            lake = Lakehouse(spark, lake_dir, os.path.join(scratch, f"table{i}"),
-                             scratch, rng, tracer)
-            lake.seed(lake_dir)
-        setup_s.append(time.perf_counter() - t0)
-        log(f"setup round {i}: {setup_s[-1]:.2f}s")
+    model = Model(os.path.join(lake_dir, "orders.parquet")) if lake_dir else None
+    t0 = time.perf_counter()
+    spark = start_session(f"perfbench-{wl.name}")
+    session_s = time.perf_counter() - t0
+    warm_up(spark, sf_dir)
+    lake = None
+    if lake_dir:
+        lake = Lakehouse(spark, lake_dir, os.path.join(scratch, "table"),
+                         scratch, rng, tracer, model)
+        lake.seed(lake_dir)
+    setup_s = time.perf_counter() - t0
+    log(f"setup {setup_s:.2f}s (session start {session_s:.2f}s)")
 
     # Closed loop: whole cycles until --seconds passed and min_cycles are
     # done; a traced run makes an even number of cycles (QueryDriver.cycle).
@@ -349,9 +355,7 @@ def run(args, scratch: str) -> dict:
         if lake is not None:
             lake.cycle()
         cycles += 1
-    drv.finish()
     ops = drv.ops + (lake.ops if lake is not None else [])
-    final_wrong = lake.check_final() if lake is not None else None
     measure_wall = time.perf_counter() - t_measure
     log(f"measured {cycles} cycles")
 
@@ -364,15 +368,16 @@ def run(args, scratch: str) -> dict:
         "cycles": cycles, "n_ops": len(ops),
         "n_measured": len(measured), "tail_pct": wl.tail_pct,
         "ops_beyond_tail": sum(1 for t in times if t > percentile(times, wl.tail_pct)),
-        "measure_wall_s": measure_wall, "setup_rounds_s": setup_s,
+        "measure_wall_s": measure_wall, "session_start_s": session_s,
         "failed_ratio": failed_ratio(ops),
         "n_failed": sum(1 for o in ops if not o["ok"]),
         "failing_ops": sorted({o["name"] + ": " + o["error"] for o in ops if not o["ok"]}),
-        "final_check": final_wrong,
-        "ops": [[o["name"], round(o["s"], 4), o["traced"]] for o in ops],
+        "check_s": sum(o["check_s"] for o in ops),
+        "ops": [[o["name"], round(o["s"], 4), o["traced"], round(o["check_s"], 4)]
+                for o in ops],
     }
     e2e = {
-        "setup_s": median(setup_s),
+        "setup_s": setup_s,
         "op_p50_s": median(times),
         "op_tail_s": percentile(times, wl.tail_pct),
         "ops_per_s": len(times) / sum(times),
@@ -391,15 +396,16 @@ def run(args, scratch: str) -> dict:
     rec["workload_metrics"] = extra
 
     if traced_run:
-        layers = {"session.start_s": median(session_s)}
-        layers.update(op_layers(measured, nproc(), tracer))
+        layers = {"session.start_s": session_s}
+        layers.update(op_layers([o for o in measured if o["kind"] == "query"],
+                                nproc(), tracer))
         if lake is not None:
             layers.update(lakehouse_layers(measured, tracer, lake))
         layers.update(ml_layers(spark, sf_dir, measured))
         layers["trace.overhead"] = trace_overhead(ops)
         rec["per_layer"] = layers
         os.makedirs(os.path.join(CACHE, "traces"), exist_ok=True)
-        tracer.dump(os.path.join(CACHE, "traces", f"{wl.name}-seed{args.seed}.json"))
+        tracer.dump(os.path.join(CACHE, "traces", f"{wl.name}-seed{args.seed}-{os.getpid()}.json"))
 
     from pyspark import __version__ as pyspark_version
 
@@ -416,7 +422,6 @@ def run(args, scratch: str) -> dict:
             "spark.sql.files.openCostInBytes",
             "spark.sql.streaming.stateStore.providerClass")},
     }
-    stop_session(spark)
     return rec
 
 
@@ -428,7 +433,7 @@ def emit(rec: dict, declared: list[dict]) -> str:
     metrics = {m["name"]: {"value": float(vals.get(m["name"], 0.0)), "unit": m["unit"]}
                for m in declared}
     return json.dumps({
-        "correct": rec["n_failed"] == 0 and rec["final_check"] is None,
+        "correct": rec["n_failed"] == 0,
         "attempted": rec["n_ops"], "failed": rec["n_failed"], "metrics": metrics})
 
 
@@ -441,6 +446,8 @@ def main(argv=None) -> int:
         return 2
     os.makedirs(os.path.join(CACHE, "data"), exist_ok=True)
     scratch = tempfile.mkdtemp(prefix="run-", dir=CACHE)
+    # a terminated run still stops its JVM and removes its scratch
+    signal.signal(signal.SIGTERM, lambda signum, _: sys.exit(128 + signum))
     try:
         prepare_env(scratch)
         rec = run(args, scratch)
@@ -448,10 +455,12 @@ def main(argv=None) -> int:
         traceback.print_exc()
         return 1
     finally:
+        stop_session()
         shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(os.path.join(CACHE, "records"), exist_ok=True)
-    path = os.path.join(CACHE, "records",
-                        f"{rec['workload']}-seed{rec['seed']}-trace{rec['trace']}.json")
+    stamp = time.strftime("%Y%m%dT%H%M%S")
+    path = os.path.join(CACHE, "records", f"{rec['workload']}-seed{rec['seed']}"
+                        f"-trace{rec['trace']}-{stamp}-{os.getpid()}.json")
     with open(path, "w") as fh:
         json.dump(rec, fh, indent=1)
     with open(BENCHMARK_JSON) as fh:

@@ -25,7 +25,7 @@ from workloads import WORKLOADS, QueryDriver  # noqa: E402
 
 def test_each_workload_reports_the_tail_documented():
     assert {w.name: w.tail_pct for w in WORKLOADS.values()} == {
-        "dashboard": 90.0, "driver_bound": 75.0}
+        "dashboard": 75.0, "driver_bound": 75.0}
 
 
 @pytest.mark.parametrize("n, beyond, want", [
@@ -81,16 +81,6 @@ class _FakeFrame:
     def __init__(self, pdf):
         self.pdf = pdf
         self.schema = types.SimpleNamespace(fields=[])
-        self.write = self
-
-    def mode(self, _):
-        return self
-
-    def format(self, _):
-        return self
-
-    def save(self):
-        pass
 
     def toPandas(self):
         return self.pdf
@@ -102,21 +92,27 @@ def test_a_wrong_answer_counts_in_failed_ratio():
     right = pd.DataFrame({"k": [1, 2], "v": [0.5, 1.5]})
     wrong = pd.DataFrame({"k": [1, 2], "v": [0.5, 1.25]})
 
-    def query(df):
-        return types.SimpleNamespace(fn=lambda spark, sf_dir: _FakeFrame(df))
+    def query(*answers):
+        it = iter(answers)
+        return types.SimpleNamespace(fn=lambda spark, sf_dir: _FakeFrame(next(it)))
 
-    registry = {"ok": query(right), "bad": query(wrong), "boom": types.SimpleNamespace(
-        fn=lambda spark, sf_dir: 1 / 0)}
+    registry = {
+        "ok": query(right, right),
+        "bad": query(wrong, wrong),
+        "stale": query(right, wrong),  # wrong only when called again
+        "boom": types.SimpleNamespace(fn=lambda spark, sf_dir: 1 / 0),
+    }
     expected = {n: canon(right) for n in registry}
     drv = QueryDriver(None, registry, "", expected, Tracer(False), None)
     for cycle in range(2):
-        drv.cycle(["ok", "bad", "boom"], cycle, traced_run=False)
-    drv.finish()
-    assert failed_ratio(drv.ops) == pytest.approx(4 / 6)
-    errors = {o["name"]: o["error"] for o in drv.ops}
-    assert errors["ok"] is None
-    assert errors["bad"].startswith("wrong result: col v row 1")
-    assert errors["boom"].startswith("ZeroDivisionError")
+        drv.cycle(list(registry), cycle, traced_run=False)
+    assert failed_ratio(drv.ops) == pytest.approx(5 / 8)
+    errors = [(o["name"], o["error"]) for o in drv.ops]
+    assert errors[0] == ("ok", None) and errors[4] == ("ok", None)
+    assert errors[1][1].startswith("wrong result: col v row 1")
+    assert errors[2] == ("stale", None)
+    assert errors[6][1].startswith("wrong result: col v row 1")
+    assert errors[3][1].startswith("ZeroDivisionError")
 
 
 def _write(path, n):
@@ -143,3 +139,20 @@ def test_amplification_counts_a_hardlinked_file_once(tmp_path):
     # a commit that writes nothing new adds delta but no bytes
     meter.observe(delta_bytes=250)
     assert meter.write_amp() == pytest.approx(1.0)
+
+
+def test_a_write_whose_snapshot_differs_from_the_model_fails(tmp_path):
+    from lakehouse import Lakehouse
+
+    lake = Lakehouse.__new__(Lakehouse)  # no session: the verbs are faked
+    lake.tracer, lake.counters, lake.traced_run = Tracer(False), None, False
+    lake.n = lake.k = lake.cycles = 0
+    lake.ops, lake.path = [], str(tmp_path)
+    lake.model = types.SimpleNamespace(versions=[1])
+    lake.meter = StorageMeter(lake.path)
+    lake.snapshot_diff = lambda: "row count differs: 3 vs 2"
+    lake._op("merge_upsert", lambda run: 2, expect=lake.model.versions.append)
+    lake._op("read_version", lambda run: 5, expect=lambda n: None)
+    assert [o["ok"] for o in lake.ops] == [False, True]
+    assert lake.ops[0]["error"] == "wrong result: row count differs: 3 vs 2"
+    assert failed_ratio(lake.ops) == pytest.approx(0.5)

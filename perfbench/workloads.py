@@ -2,7 +2,10 @@
 
 One client, closed loop: the next op starts only when the previous one
 finished. A query op is ``REGISTRY[name].fn(spark, sf_dir)`` followed by
-a full execution to the ``noop`` sink, timed from outside the package.
+a full execution that collects the answer with ``toPandas()``, as the
+reference dashboard does to render it, timed from outside the package.
+The check then compares that same answer with the oracle, outside the
+timed op, without running the query again.
 Ops run in whole cycles over the workload's op list until ``--seconds``
 have passed and the workload's ``min_cycles`` are done, always in the
 listed order: a run is short, so its first cycle is each query's first
@@ -14,6 +17,7 @@ runs after its queries is in ``lakehouse.py``.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 from lakehouse import OPS_PER_CYCLE
@@ -40,15 +44,18 @@ STREAM_REPLAYS = ["stream_tumbling_hourly", "stream_scd1_user_last_event"]
 #: Cheap queries whose driver build plus planning was at least half of
 #: their op time at sf0.001 on 4 cores (README.md has the selection run).
 SMALL_DRIVER_BOUND = ["lang_id_ngram", "length_decile_thresholds",
-                      "ks_exponential_gaps"]
+                      "ks_exponential_gaps", "eb_shrunk_return_rates",
+                      "ivf_ann_topk", "split_divergence", "cusum_changepoints"]
 
 DRIVER_BOUND = FIXPOINTS + STREAM_REPLAYS + SMALL_DRIVER_BOUND
 
 
 #: ``op_tail_s`` is the highest of ``metrics.TAIL_CANDIDATES`` with at least
-#: this many ops of a run beyond it. Ten would need 100 ops per run,
-#: which the run-time budget of the whole benchmark does not allow.
-MIN_BEYOND = 2
+#: this many ops of a run beyond it. Ten would need 40 ops per run for p75,
+#: which the run-time budget of the whole benchmark does not allow; with
+#: fewer than five, p90 of 32 ops fell between two ops of different kinds
+#: and moved by a quarter between runs.
+MIN_BEYOND = 5
 
 
 @dataclass(frozen=True)
@@ -67,9 +74,8 @@ class Workload:
 
 
 WORKLOADS = {
-    # Its ops are short, so a second cycle halves the sampling noise of
-    # the median for about 10 s a run.
-    "dashboard": Workload("dashboard", 0.002, tuple(DASHBOARD), min_cycles=2),
+    # A second cycle of short ops steadies the median for about 15 s a run.
+    "dashboard": Workload("dashboard", 0.001, tuple(DASHBOARD), min_cycles=2),
     "driver_bound": Workload("driver_bound", 0.001, tuple(DRIVER_BOUND), lake_sf=0.01),
 }
 
@@ -86,7 +92,6 @@ class QueryDriver:
         self.tracer = tracer
         self.counters = counters  # None unless traced
         self.stream = stream_progress
-        self.verdicts: dict[str, str | None] = {}
         self.ops: list[dict] = []
         self.n = 0
 
@@ -105,18 +110,22 @@ class QueryDriver:
                 with run.span("spark.plan"):
                     df._jdf.queryExecution().executedPlan()
             with run.span("spark.exec"):
-                df.write.mode("overwrite").format("noop").save()
-            return df
+                return df, df.toPandas()
 
-        df = run(body)
+        df, answer = run(body) or (None, None)
         if self.stream is not None:
             op["batches"] = self.stream.take()
-        if op["error"] is None and name not in self.verdicts:
-            # once per query per run, outside the timed op
+        t0 = time.perf_counter()
+        if op["error"] is None:
+            # every op's answer, outside the timed op
             try:
-                self.verdicts[name] = check(df, self.expected[name])
+                wrong = check(df.schema, answer, self.expected[name])
             except Exception as e:  # noqa: BLE001
-                self.verdicts[name] = f"check raised {type(e).__name__}: {e}"[:300]
+                wrong = f"check raised {type(e).__name__}: {e}"
+            if wrong is not None:
+                op["error"] = f"wrong result: {wrong}"[:300]
+        op["check_s"] = time.perf_counter() - t0
+        op["ok"] = op["error"] is None
         return op
 
     def cycle(self, names, cycle_no: int, traced_run: bool) -> None:
@@ -128,14 +137,6 @@ class QueryDriver:
             op = self.run_op(name, traced_run and (i + cycle_no) % 2 == 0)
             op["slot"] = (i, cycle_no // 2)
             self.ops.append(op)
-
-    def finish(self) -> None:
-        """Mark each op ok or not, now that every query was checked."""
-        for op in self.ops:
-            wrong = self.verdicts.get(op["name"])
-            op["ok"] = op["error"] is None and wrong is None
-            if op["error"] is None and wrong is not None:
-                op["error"] = f"wrong result: {wrong}"
 
 
 def stream_metrics(ops: list[dict]) -> dict[str, float]:
